@@ -660,8 +660,9 @@ def main() -> int:
     # inside the driver's ~2 KB tail capture (BENCH_r05 had "parsed":
     # null because the 92-entry per-query dict overflowed the buffer),
     # AND the driver's per_query/scaling tables populate only from a
-    # "queries" dict inside this line.  Resolution: inline the
-    # fixed-priority subset up to LINE_BYTE_BUDGET; the complete
+    # "queries" dict inside this line.  Resolution: inline, in priority
+    # order, every entry that still fits in LINE_BYTE_BUDGET (one that
+    # does not is skipped, not the end of the fill); the complete
     # medians + raw repeats stay in BENCH_runs.json.
     base = {
         "metric": "headline_queries_total",
@@ -693,7 +694,7 @@ def main() -> int:
         trial = dict(base)
         trial["queries"] = candidate
         if len(json.dumps(trial, separators=(",", ":"))) > LINE_BYTE_BUDGET:
-            break
+            continue
         base["queries"] = candidate
     print(json.dumps(base, separators=(",", ":")))
     return 0

@@ -31,6 +31,7 @@ from __future__ import annotations
 import threading
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable, Protocol
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +46,7 @@ from .hooks import run_hooks
 from .operators.orphans import clean_orphans_delete, clean_orphans_set_null
 from .plan_report import PlanReport, build_plan_report
 from .plans.checkpoint import CheckpointManager, compatibility_fingerprint
-from .plans.chunk import plan_table_chunks
+from .plans.chunk import Chunk, ChunkPlan, plan_table_chunks
 from .plans.validation import ValidationResult, validate_row_counts
 
 
@@ -69,6 +70,9 @@ class TableRunResult:
     table: str
     rows_written: int
     chunks: int
+    # rows dropped by orphan cleanup in the batches this run wrote: the
+    # persisted pre-clean rows counted minus ``rows_written`` (no count
+    # runs over the cleaned plan, so the cleanup executes once, in the write)
     orphans_removed: int = 0
     # True when every chunk was written by THIS run (not skipped/resumed):
     # rows_written is then the complete cleaned row count and validation can
@@ -110,10 +114,13 @@ class MigrationPipeline:
         self.type_mapper = type_mapper
         self.default_mapper = default_mapper
         self.checkpoint = checkpoint or CheckpointManager("", noop=True)
-        # per-run caches: one persisted source read per table, shared by the
-        # movement write, self-FK snapshot, parent anti-joins, and validation
-        self._transformed_cache: dict[str, DataFrame] = {}
+        # per-run caches: each FK-referenced table's cleaned rows as written,
+        # persisted, so children anti-join against cached parent rows; and
+        # every frame the run persisted, all released when run() ends
         self._cleaned_cache: dict[str, DataFrame] = {}
+        self._persisted: list[DataFrame] = []
+        # tables some other table's FK references (set by run())
+        self._referenced: frozenset[str] = frozenset()
         # advisor outputs: source row counts measured at plan time (reused by
         # validation), parents whose FK anti-joins should broadcast
         self._source_counts: dict[str, int] = {}
@@ -277,10 +284,14 @@ class MigrationPipeline:
         (reference post.go:475-538). When ``df`` is one chunk batch of a
         larger table the caller must pass the full-table snapshot via
         ``self_snapshot``; anti-joining a batch against itself would delete
-        valid rows whose parent lives in another batch. Row counting is one
-        before/after pair for the whole FK set, not per FK."""
+        valid rows whose parent lives in another batch.
+
+        Only builds the plan: no Spark job runs here, and the returned
+        removal count is always 0. The cleanup executes once, inside the
+        write, and :meth:`move_table` derives the removals from its totals
+        (``rows_in − rows_written``). A table with no FK to clean comes
+        back as the same object."""
         snapshot = self_snapshot if self_snapshot is not None else df
-        any_delete_rule = False
         for fk in table.foreign_keys:
             parent_df = (
                 snapshot if fk.ref_pg_table == table.pg_name else parents.get(fk.ref_pg_table)
@@ -294,39 +305,66 @@ class MigrationPipeline:
             if fk.delete_rule.upper() == "SET NULL":
                 df = clean_orphans_set_null(df, parent_df, fk.columns, fk.ref_columns)
             else:
-                any_delete_rule = True
                 df = clean_orphans_delete(df, parent_df, fk.columns, fk.ref_columns)
-        removed = (snapshot.count() - df.count()) if any_delete_rule and self_snapshot is None else 0
-        if any_delete_rule and self_snapshot is not None:
-            removed = -1  # caller derives the count from write-side totals
-        return df, removed
+        return df, 0
 
-    def _full_transformed(self, table: Table) -> DataFrame:
-        """Full-table source read → transforms, persisted and cached so the
-        self-FK snapshot, parent cache, and validation all share ONE read
-        (the reference reads each table once and validates from COPY row
-        counts, validate.go:34-135 — this is the Spark analogue)."""
-        with self._cache_lock:
-            df = self._transformed_cache.get(table.pg_name)
-            if df is None:
-                df = apply_transforms(
-                    self.source.read_table(self.spark, table, None),
-                    table, self.source.kind, self.cfg.type_mapping,
-                ).persist()
-                self._transformed_cache[table.pg_name] = df
-            return df
+    def _transformed(self, table: Table, predicates: list[str] | None) -> DataFrame:
+        return apply_transforms(
+            self.source.read_table(self.spark, table, predicates),
+            table, self.source.kind, self.cfg.type_mapping,
+        )
+
+    def _persist(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` and remember it so run() releases it at the end,
+        whether or not the run fails."""
+        self._persisted.append(df)
+        return df.persist()
 
     def cleaned_source_df(self, table: Table, parents: dict[str, DataFrame]) -> DataFrame:
         """The table exactly as the movement phase writes it: full source
         read → transforms → orphan cleanup against the (cleaned) parents.
-        Cached per table — consumers (parent cache, validation) share the
-        same lineage over the one persisted transformed read."""
-        cached = self._cleaned_cache.get(table.pg_name)
+
+        A referenced table that moved completely in this run returns the
+        persisted cleaned rows its move wrote. Otherwise (a table finished
+        by an earlier run, or a resumed one being validated) the frame is
+        built here, persisted if other tables reference it."""
+        with self._cache_lock:
+            cached = self._cleaned_cache.get(table.pg_name)
         if cached is not None:
             return cached
-        cleaned, _ = self.clean_orphans(self._full_transformed(table), table, parents)
-        self._cleaned_cache[table.pg_name] = cleaned
-        return cleaned
+        cleaned, _ = self.clean_orphans(self._transformed(table, None), table, parents)
+        if table.pg_name in self._referenced:
+            cleaned = self._persist(cleaned)
+        with self._cache_lock:
+            return self._cleaned_cache.setdefault(table.pg_name, cleaned)
+
+    def _write_batch(
+        self,
+        table: Table,
+        predicates: list[str] | None,
+        parents: dict[str, DataFrame],
+        self_snapshot: DataFrame | None,
+        keep: bool,
+        append: bool,
+    ) -> tuple[int, int, DataFrame]:
+        """Read → transform → clean → write one batch. Returns the pre-clean
+        row count, the rows written and the cleaned frame, which is
+        persisted (and loaded by the write) when ``keep`` is set.
+
+        The pre-clean rows are persisted so that the count (and a self-FK
+        anti-join of a whole table against itself) scans cached rows; they
+        are released once the write has loaded the cleaned copy, which
+        Spark keeps cached without them."""
+        base = self._persist(self._transformed(table, predicates))
+        cleaned, _ = self.clean_orphans(base, table, parents, self_snapshot)
+        if keep and cleaned is not base:
+            cleaned = self._persist(cleaned)
+        rows = self.target.write(cleaned, table.pg_name, append=append)
+        # a table with no FK to clean comes back untouched: nothing removed
+        rows_in = rows if cleaned is base else base.count()
+        if not (keep and cleaned is base):
+            base.unpersist()
+        return rows_in, rows, cleaned
 
     def move_table(self, table: Table, parents: dict[str, DataFrame]) -> TableRunResult:
         """Move one table with **chunk-granular restartability**: chunk
@@ -334,83 +372,81 @@ class MigrationPipeline:
         one distributed read→transform→write job, and every chunk in the
         batch is marked complete only after the batch's write commits.
 
+        Each batch's read → transform → anti-join runs once, inside its
+        write. ``orphans_removed`` is ``rows_in − rows_written`` over the
+        batches written here, where ``rows_in`` counts the batch's
+        persisted pre-clean rows. A table other tables reference keeps its
+        cleaned rows persisted for their anti-joins (and drops the
+        pre-clean copy), so parent cleanup never re-runs per child.
+
         Resume is **idempotent by delete-then-insert**: the production sinks
         commit per partition, so a crash mid-batch can leave some partitions
         committed with no chunk recorded. A resumed run re-plans the
         identical chunks (guarded by the compatibility fingerprint), DELETEs
-        every not-yet-recorded chunk's key range from the target, and
-        re-writes exactly those chunks — count-exact, no duplicate rows even
-        when the crash landed between a partition commit and the checkpoint
-        flush (BASELINE.md restartability target).
+        the key ranges of every not-yet-recorded chunk from the target in one
+        statement, and re-writes exactly those chunks — count-exact, no
+        duplicate rows even when the crash landed between a partition commit
+        and the checkpoint flush (BASELINE.md restartability target).
         """
         if self.checkpoint.is_table_done(table.pg_name):
             return TableRunResult(table.pg_name, 0, 0, complete_this_run=False)
         plan = self.chunk_plan_for(table)
         preds = plan.predicates()
-        has_self_fk = any(fk.ref_pg_table == table.pg_name for fk in table.foreign_keys)
-
-        def prepared(
-            predicates: list[str] | None, self_snap: DataFrame | None
-        ) -> tuple[DataFrame, DataFrame, int]:
-            base = self.source.read_table(self.spark, table, predicates)
-            base = apply_transforms(
-                base, table, self.source.kind, self.cfg.type_mapping
-            ).persist()  # counted + cleaned + written: one computation
-            cleaned, removed = self.clean_orphans(base, table, parents, self_snapshot=self_snap)
-            return base, cleaned, removed
+        keep = table.pg_name in self._referenced
 
         if preds is None or len(preds) <= 1:
-            base, df, removed = prepared(preds, None)
-            rows = self.target.write(df, table.pg_name)
+            rows_in, rows, cleaned = self._write_batch(
+                table, preds, parents, None, keep, append=False
+            )
             self.checkpoint.begin_table(table.pg_name, max(1, len(plan.chunks)))
             self.checkpoint.mark_table_done(table.pg_name, rows)
-            # the written DataFrame IS the cleaned full table: cache it for
-            # parent/validation reuse instead of re-reading the source
-            self._transformed_cache.setdefault(table.pg_name, base)
-            self._cleaned_cache.setdefault(table.pg_name, df)
-            return TableRunResult(table.pg_name, rows, len(plan.chunks), removed)
+            if keep:
+                with self._cache_lock:
+                    self._cleaned_cache[table.pg_name] = cleaned
+            return TableRunResult(table.pg_name, rows, len(plan.chunks), rows_in - rows)
 
         done = self.checkpoint.completed_indices(table.pg_name)
         self.checkpoint.begin_table(table.pg_name, len(preds))
         todo = [(i, p) for i, p in enumerate(preds) if i not in done]
         if done and todo:
             # partitions of an unrecorded chunk may have committed before the
-            # crash — purge each pending chunk's key range so re-writes land
+            # crash — purge the pending chunks' key ranges so re-writes land
             # exactly once (reference records each chunk after its own COPY
-            # transaction; per-range DELETE is the idempotent equivalent)
-            pg_key = table.column(plan.chunk_key).pg_name if plan.chunk_key else None
-            for i, _ in todo:
-                chunk = plan.chunks[i]
-                if chunk.predicate(pg_key) is not None:
-                    self._delete_range(table.pg_name, chunk, pg_key)
+            # transaction; the range DELETE is the idempotent equivalent)
+            self._purge_chunks(table, plan, [i for i, _ in todo])
+        # a resumed table writes only part of itself: nothing to keep
+        keep = keep and not done
         # self-FK cleanup must see the whole pre-clean table, not the batch
-        self_snap = self._full_transformed(table) if has_self_fk else None
+        has_self_fk = any(fk.ref_pg_table == table.pg_name for fk in table.foreign_keys)
+        self_snap = self._persist(self._transformed(table, None)) if has_self_fk else None
         batch_size = max(1, self.cfg.effective_workers() * 4)
-        rows_total, removed_total = 0, 0
-        batch_rows_in = 0
+        rows_total = rows_in_total = 0
+        kept: list[DataFrame] = []
         appending = bool(done)  # resumed: prior chunks already landed
         for start in range(0, len(todo), batch_size):
             batch = todo[start : start + batch_size]
-            base, df, removed = prepared([p for _, p in batch], self_snap)
-            rows = self.target.write(df, table.pg_name, append=appending)
-            if removed < 0:  # self-FK path: derive removals from write totals
-                batch_rows_in += base.count()
-                removed = 0
-            base.unpersist()
+            rows_in, rows, cleaned = self._write_batch(
+                table, [p for _, p in batch], parents, self_snap, keep, appending
+            )
             appending = True
             rows_total += rows
-            removed_total += removed
+            rows_in_total += rows_in
+            if keep:
+                kept.append(cleaned)
             # chunks are marked after the batch write returns; a crash inside
             # the write is repaired by the delete-then-insert pass above on
             # the next resume. Rows land on the first chunk of the batch so
             # checkpoint row totals stay exact.
             for n, (i, _) in enumerate(batch):
                 self.checkpoint.mark_chunk_done(table.pg_name, i, rows if n == 0 else 0)
-        if has_self_fk and not done:
-            removed_total = batch_rows_in - rows_total
+        if self_snap is not None:
+            self_snap.unpersist()
+        if kept:
+            with self._cache_lock:
+                self._cleaned_cache[table.pg_name] = reduce(DataFrame.unionByName, kept)
         self.checkpoint.mark_table_done(table.pg_name, rows_total)
         return TableRunResult(
-            table.pg_name, rows_total, len(preds), removed_total,
+            table.pg_name, rows_total, len(preds), rows_in_total - rows_total,
             complete_this_run=not done,
         )
 
@@ -485,25 +521,54 @@ class MigrationPipeline:
                 raise first_exc
             return results
 
-    def _delete_range(self, table: str, chunk, pg_key: str) -> None:
-        """Purge one chunk's key range from the target. ``delete_where``
+    def _purge_chunks(self, table: Table, plan: ChunkPlan, indices: list[int]) -> None:
+        """Purge the key ranges of the given chunks from the target in ONE
+        delete: consecutive chunks are contiguous ranges, so each run of
+        them merges into one range and the runs are ORed. ``delete_where``
         receives the predicate over the BARE normalized column name (valid
         in both Spark SQL and fold-to-lowercase PostgreSQL); the raw-SQL
         fallback quotes identifiers pg-style."""
+        runs: list[list[int]] = []
+        for i in sorted(indices):
+            if runs and runs[-1][-1] == i - 1:
+                runs[-1].append(i)
+            else:
+                runs.append([i])
+        ranges = [
+            Chunk(plan.chunks[r[0]].lo, plan.chunks[r[-1]].hi, plan.chunks[r[-1]].is_last)
+            for r in runs
+        ]
+        pg_key = table.column(plan.chunk_key).pg_name
+
+        def where(key: str) -> str:
+            return " OR ".join(f"({c.predicate(key)})" for c in ranges)
+
         if hasattr(self.target, "delete_where"):
-            self.target.delete_where(table, chunk.predicate(pg_key))
+            self.target.delete_where(table.pg_name, where(pg_key))
         else:
-            qualified = f"{_q(self.cfg.target_schema)}.{_q(table)}"
-            self.target.execute(
-                f"DELETE FROM {qualified} WHERE {chunk.predicate(_q(pg_key))}"
-            )
+            qualified = f"{_q(self.cfg.target_schema)}.{_q(table.pg_name)}"
+            self.target.execute(f"DELETE FROM {qualified} WHERE {where(_q(pg_key))}")
 
     # -- the full sequence ---------------------------------------------------
 
     def run(self) -> MigrationResult:
         t0 = time.monotonic()
         result = MigrationResult()
+        try:
+            self._migrate(result)
+        finally:
+            # also after a failed run: release every persisted frame, then
+            # let the source end its snapshot transaction and drop its spools
+            for df in self._persisted:
+                df.unpersist()
+            self._persisted.clear()
+            self._cleaned_cache.clear()
+            if hasattr(self.source, "close"):
+                self.source.close()
+        result.elapsed_sec = time.monotonic() - t0
+        return result
 
+    def _migrate(self, result: MigrationResult) -> None:
         schema = self.source.introspect()
         tables = self.select_tables(schema)
         objects = self.source.source_objects()
@@ -555,12 +620,12 @@ class MigrationPipeline:
             # only tables some FK actually references are retained, and the
             # retained DataFrame is the CLEANED form (what was written), so
             # grandchildren are checked against surviving parent rows only
-            referenced = {
+            self._referenced = frozenset(
                 fk.ref_pg_table
                 for t in tables
                 for fk in t.foreign_keys
                 if fk.ref_pg_table != t.pg_name
-            }
+            )
             ordered = _parents_first(tables)
             parent_dfs: dict[str, DataFrame] = {}
             for wave in _dependency_waves(ordered):
@@ -569,7 +634,7 @@ class MigrationPipeline:
                 # every table that actually moved (ADVICE r14)
                 self._move_wave(wave, parent_dfs, sink=result.tables)
                 for table in wave:
-                    if table.pg_name in referenced:
+                    if table.pg_name in self._referenced:
                         parent_dfs[table.pg_name] = self.cleaned_source_df(
                             table, parent_dfs
                         )
@@ -631,14 +696,6 @@ class MigrationPipeline:
         self.checkpoint.flush()
         if result.ok:
             self.checkpoint.delete()
-        if hasattr(self.source, "close"):
-            self.source.close()  # single_tx: ends the snapshot transaction
-        for df in self._transformed_cache.values():
-            df.unpersist()
-        self._transformed_cache.clear()
-        self._cleaned_cache.clear()
-        result.elapsed_sec = time.monotonic() - t0
-        return result
 
 
 def _q(name: str) -> str:

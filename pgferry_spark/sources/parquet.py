@@ -84,8 +84,9 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
 
 
 def invalidate_parquet_memo(path_prefix: str | None = None) -> int:
-    """Drop memoized plan handles whose path starts with ``path_prefix``
-    (all of them when None). The explicit escape hatch for the one case
+    """Drop memoized plan handles for ``path_prefix`` and every path below
+    it, matched on whole path components, so ``/x/sf1`` keeps ``/x/sf10``
+    (all handles when None). The explicit escape hatch for the one case
     the read-only contract does not cover (ADVICE r14): a source
     directory whose FILES changed in-process (e.g. refreshed between two
     migrations in one long-lived session) — the memoized plan pins the
@@ -96,7 +97,8 @@ def invalidate_parquet_memo(path_prefix: str | None = None) -> int:
         _READONLY_MEMO.clear()
         return n
     prefix = os.path.abspath(path_prefix)
-    doomed = [k for k in _READONLY_MEMO if k[1].startswith(prefix)]
+    below = prefix.rstrip(os.sep) + os.sep
+    doomed = [k for k in _READONLY_MEMO if k[1] == prefix or k[1].startswith(below)]
     for k in doomed:
         del _READONLY_MEMO[k]
     return len(doomed)

@@ -500,6 +500,170 @@ def test_resume_after_partition_commit_without_chunk_record(spark, tmp_path):
     assert final.select("id").distinct().count() == 500  # no duplicates
 
 
+def test_clean_orphans_launches_no_spark_jobs(spark, blog_db, tmp_path):
+    """clean_orphans only builds the anti-join plan: the cleanup runs once,
+    inside the write, and removals come from the write totals."""
+    pipe, _ = make_pipeline(spark, blog_db, tmp_path)
+    tables = {t.pg_name: t for t in pipe.select_tables(pipe.source.introspect())}
+    parents = {n: pipe.source.read_table(spark, tables[n], None) for n in ("users", "posts")}
+    child = pipe.source.read_table(spark, tables["comments"], None)
+    sc = spark.sparkContext._jsc.sc()
+    tracker = sc.statusTracker()
+
+    def njobs():
+        sc.listenerBus().waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(None))
+
+    j0 = njobs()
+    cleaned, removed = pipe.clean_orphans(child, tables["comments"], parents)
+    assert njobs() == j0
+    assert removed == 0
+    assert cleaned.count() == 10  # the two orphans go once the plan runs
+    pipe.source.close()
+
+
+def test_children_clean_against_persisted_parents(spark, tmp_path):
+    """A→B→C chain with orphans at both levels: every table is read once,
+    and once a table has moved its source spools are deleted, so C's
+    anti-join can only see B's cleaned rows through the copy B's move
+    persisted. Nothing stays persisted after the run."""
+    import sqlite3 as sq3
+
+    from pgferry_spark.backends import remove_spools
+
+    db = str(tmp_path / "chain.db")
+    con = sq3.connect(db)
+    con.executescript(
+        """
+        CREATE TABLE a (id INTEGER PRIMARY KEY);
+        CREATE TABLE b (id INTEGER PRIMARY KEY, a_id INTEGER NOT NULL REFERENCES a(id));
+        CREATE TABLE c (id INTEGER PRIMARY KEY, b_id INTEGER NOT NULL REFERENCES b(id));
+        """
+    )
+    con.execute("INSERT INTO a VALUES (1)")
+    con.executemany("INSERT INTO b VALUES (?,?)", [(1, 1), (2, 99)])  # b2 orphan
+    con.executemany("INSERT INTO c VALUES (?,?)", [(1, 1), (2, 2), (3, 1)])  # c2 -> b2
+    con.commit()
+    con.close()
+
+    reads = []
+
+    class CountingSource(SqliteSource):
+        def read_table(self, spark, table, predicates):
+            reads.append(table.pg_name)
+            return super().read_table(spark, table, predicates)
+
+    class SpoolDroppingPipeline(MigrationPipeline):
+        def move_table(self, table, parents):
+            res = super().move_table(table, parents)
+            remove_spools(self.source._spools)
+            return res
+
+    cfg = MigrationConfig(
+        source_type="sqlite", source_dsn=db, target_dsn="spool://x", target_schema="app",
+    )
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    result = SpoolDroppingPipeline(
+        spark, cfg, CountingSource(db), SpoolTarget(spark, str(tmp_path / "chain_out")),
+        map_sqlite_type, map_sqlite_default,
+    ).run()
+    assert result.ok
+    assert sorted(reads) == ["a", "b", "c"]
+    moved = {r.table: (r.rows_written, r.orphans_removed) for r in result.tables}
+    assert moved == {"a": (1, 0), "b": (1, 1), "c": (2, 1)}
+    assert persistent().size() == before
+
+
+def _orphan_child_db(path):
+    """Parent ``p`` with ids 1..50 and child ``kid`` with ids 1..200 whose
+    ``p_id`` cycles 1..60, so every kid pointing past 50 is an orphan."""
+    import sqlite3 as sq3
+
+    con = sq3.connect(path)
+    con.executescript(
+        """
+        CREATE TABLE p (id INTEGER PRIMARY KEY, v TEXT);
+        CREATE TABLE kid (id INTEGER PRIMARY KEY,
+                          p_id INTEGER NOT NULL REFERENCES p(id), v TEXT);
+        """
+    )
+    con.executemany("INSERT INTO p VALUES (?,?)", [(i, f"p{i}") for i in range(1, 51)])
+    kids = [(i, i % 60 + 1, f"k{i}") for i in range(1, 201)]
+    con.executemany("INSERT INTO kid VALUES (?,?,?)", kids)
+    con.commit()
+    con.close()
+    return [k for k, p_id, _ in kids if p_id <= 50]
+
+
+def test_chunked_child_orphans_fresh_and_resumed(spark, tmp_path):
+    """A chunked, non-self-FK child with known orphans lands exact, both
+    fresh and resumed after a batch write that landed but was never
+    recorded: rows_written and orphans_removed cover the batches written
+    by that run, the target holds every surviving key once, and the
+    resume purges the pending chunks with a single delete."""
+    import os
+
+    db = str(tmp_path / "kids.db")
+    survivors = _orphan_child_db(db)
+
+    class Target(SpoolTarget):
+        """Counts deletes; write ``tear_on`` lands, then the run crashes."""
+
+        def __init__(self, *a, tear_on=0, **kw):
+            super().__init__(*a, **kw)
+            self.writes = self.deletes = 0
+            self.tear_on = tear_on
+
+        def write(self, df, table, append=False):
+            self.writes += 1
+            rows = super().write(df, table, append=append)
+            if self.writes == self.tear_on:
+                raise RuntimeError("crash after the write landed")
+            return rows
+
+        def delete_where(self, table, predicate):
+            self.deletes += 1
+            return super().delete_where(table, predicate)
+
+    def build(target, ckpt):
+        # chunk_size=20: p has 3 chunks (one batch), kid 10 chunks in
+        # batches of 4, 4 and 2 (workers=1)
+        cfg = MigrationConfig(
+            source_type="sqlite", source_dsn=db, target_dsn="spool://x",
+            target_schema="app", chunk_size=20, workers=1, resume=True,
+        )
+        pipe = MigrationPipeline(
+            spark, cfg, SqliteSource(db), target, map_sqlite_type, map_sqlite_default,
+        )
+        pipe.checkpoint = CheckpointManager(ckpt, flush_items=1)
+        return pipe
+
+    def kid_ids(out):
+        return sorted(r["id"] for r in spark.read.parquet(os.path.join(out, "kid")).collect())
+
+    fresh_out = str(tmp_path / "fresh")
+    result = build(Target(spark, fresh_out), str(tmp_path / "fresh.json")).run()
+    assert result.ok
+    moved = {r.table: (r.rows_written, r.orphans_removed) for r in result.tables}
+    assert moved == {"p": (50, 0), "kid": (len(survivors), 200 - len(survivors))}
+    assert kid_ids(fresh_out) == survivors
+
+    out, ckpt = str(tmp_path / "resumed"), str(tmp_path / "resumed.json")
+    # write 1 is p, write 2 kid's first batch; write 3 (kid ids 81..160)
+    # lands and crashes before its chunks are recorded
+    with pytest.raises(RuntimeError, match="crash after the write landed"):
+        build(Target(spark, out, tear_on=3), ckpt).run()
+    target = Target(spark, out)
+    result = build(target, ckpt).run()
+    assert result.ok
+    assert target.deletes == 1
+    kept = [k for k in survivors if k >= 81]  # the resume re-writes ids 81..200
+    moved = {r.table: (r.rows_written, r.orphans_removed) for r in result.tables}
+    assert moved == {"p": (0, 0), "kid": (len(kept), 120 - len(kept))}
+    assert kid_ids(out) == survivors  # no duplicate keys, no orphans
+
+
 class TestContentDiff:
     def test_all_four_statuses(self, spark):
         from pgferry_spark.plans.validation import content_diff

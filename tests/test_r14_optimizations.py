@@ -107,6 +107,23 @@ class TestReadOnlyParquetMemo:
         assert df.storageLevel.useMemory is False
         assert df.storageLevel.useDisk is False
 
+    def test_invalidate_matches_whole_path_components(self, monkeypatch):
+        # invalidating /x/sf1 drops it and the paths below it, never the
+        # sibling /x/sf10 that merely shares its spelling
+        from pgferry_spark.sources import parquet
+
+        memo = {
+            ("app", "/x/sf1"): "a",
+            ("app", "/x/sf1/region.parquet"): "b",
+            ("app", "/x/sf10"): "c",
+            ("app", "/x/sf10/region.parquet"): "d",
+        }
+        monkeypatch.setattr(parquet, "_READONLY_MEMO", memo)
+        assert parquet.invalidate_parquet_memo("/x/sf1") == 2
+        assert sorted(k[1] for k in memo) == ["/x/sf10", "/x/sf10/region.parquet"]
+        assert parquet.invalidate_parquet_memo("/x/sf10/") == 2
+        assert memo == {}
+
 
 class TestVerifyStepPersist:
     def test_jaccard_pairs_results_unchanged_by_persist(self, spark):

@@ -12,6 +12,7 @@ from pgferry_spark.backends import SingleTxSource, SpoolTarget, SqliteSource, sp
 from pgferry_spark.catalog.model import Column, Index, Schema, Table
 from pgferry_spark.config import MigrationConfig
 from pgferry_spark.pipeline import MigrationPipeline
+from pgferry_spark.types import map_sqlite_default, map_sqlite_type
 
 
 def _table(name, pk, cols):
@@ -112,3 +113,58 @@ def test_spool_batches_empty(spark):
     schema = StructType([StructField("id", LongType())])
     df = spool_batches(spark, schema, iter([]))
     assert df.count() == 0 and df.columns == ["id"]
+
+
+def _spools(tmp):
+    return [d for d in os.listdir(tmp) if d.startswith("pgferry_spool_")]
+
+
+def test_run_removes_spools_even_when_it_fails(spark, two_table_db, tmp_path, monkeypatch):
+    """Every parquet spool a run's source created is gone when run()
+    returns, and when it raises."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    cfg = MigrationConfig(
+        source_type="sqlite", source_dsn=two_table_db, target_dsn="spool://x",
+        target_schema="app", chunk_size=50, workers=1,
+    )
+
+    class FailingTarget(SpoolTarget):
+        def write(self, df, table, append=False):
+            if table == "b":
+                raise RuntimeError("simulated crash")
+            return super().write(df, table, append=append)
+
+    def run(target):
+        return MigrationPipeline(
+            spark, cfg, SqliteSource(two_table_db), target,
+            map_sqlite_type, map_sqlite_default,
+        ).run()
+
+    assert run(SpoolTarget(spark, str(tmp_path / "ok_out"))).ok
+    assert _spools(tmp) == []
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run(FailingTarget(spark, str(tmp_path / "bad_out")))
+    assert _spools(tmp) == []
+
+
+def test_single_tx_close_removes_spools(spark, two_table_db, tmp_path, monkeypatch):
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    schema = Schema(tables=[_table("a", "id", [("id", "bigint"), ("v", "text")])])
+    src = SingleTxSource(
+        connect=lambda: sqlite3.connect(two_table_db),
+        schema=schema,
+        read_schemas={"a": StructType([StructField("id", LongType()),
+                                       StructField("v", StringType())])},
+    )
+    assert src.read_table(spark, schema.tables[0], None).count() == 200
+    assert len(_spools(tmp)) == 1
+    src.close()
+    assert _spools(tmp) == []
