@@ -1,24 +1,29 @@
 """Concrete source/target backends for the migration pipeline.
 
+The two driver-side sources share one reader (``_DriverSideSource``): the
+SELECT/COUNT/MIN-MAX text with identifiers quoted per dialect, and one fetch
+loop that streams ``fetch_batch`` rows at a time into a parquet spool which
+Spark then scans distributed. They differ only in connection policy:
+
 * ``SqliteSource`` — real introspection through the stdlib driver (the
-  pragma surface, reference source_sqlite.go) + bounded-memory row
-  streaming: one read connection (the reference's SQLite cap,
-  source_sqlite.go:173) fetches ``fetch_batch`` rows at a time into a
-  parquet spool, and Spark scans the spool distributed. MySQL/MSSQL take
-  the JDBC partitioned path (sources/jdbc.py) instead.
+  pragma surface, reference source_sqlite.go); opens one read connection
+  per call (the reference's SQLite cap, source_sqlite.go:173). MySQL/MSSQL
+  take the JDBC partitioned path (sources/jdbc.py) instead.
 * ``SingleTxSource`` — the `single_tx` consistent-snapshot path (reference
-  migrate.go:149-259): all tables sequentially through ONE DB-API
-  connection in one transaction, streamed through the same spool.
+  migrate.go:149-259): all tables sequentially through ONE held DB-API
+  connection in one transaction.
 * ``ParquetSource`` — parquet-lake source; fully distributed scans.
 * ``SpoolTarget`` — test/diagnostic target: DDL statements are recorded in
   order (inspectable, like a dry-run transcript), data lands as parquet per
-  table. Swap for a JDBC/COPY target (sources/sink.py) against PostgreSQL;
-  the pipeline only sees the 3-method protocol.
+  table. Swap for the COPY target (sources/sink.py) against PostgreSQL;
+  the pipeline only sees the 4-method protocol (``execute``, ``write``,
+  ``count``, ``delete_where``).
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .catalog.identifiers import mssql_ident, mysql_ident, pg_ident
 from .catalog.model import Schema, SourceObjects, Table
 from .catalog.parsers import sqlite_normalize_affinity
 from .sources import sqlite_introspect as sq
@@ -118,18 +124,82 @@ def remove_spools(spools: list[str]) -> None:
         shutil.rmtree(spools.pop(), ignore_errors=True)
 
 
+# SQLite quotes identifiers the standard way: "…" with embedded quotes doubled
+_QUOTE = {"sqlite": pg_ident, "mysql": mysql_ident, "mssql": mssql_ident}
+
+
+class _DriverSideSource:
+    """Reads a table on the driver through one DB-API connection: the
+    SELECT, COUNT and MIN/MAX text, with identifiers quoted for the
+    source's dialect, and the fetch loop that streams ``fetch_batch`` rows
+    at a time into a parquet spool. Each subclass supplies its connection
+    policy (``_cursor``) and its Spark read schema (``_read_schema``)."""
+
+    kind: str
+    fetch_batch: int
+    _spools: list
+
+    def _q(self, name: str) -> str:
+        return _QUOTE[self.kind](name)
+
+    def close(self) -> None:
+        """Remove the spools of every table read so far; DataFrames that
+        ``read_table`` returned cannot be scanned afterwards."""
+        remove_spools(self._spools)
+
+    def read_table(
+        self, spark: SparkSession, table: Table, predicates: list[str] | None
+    ) -> DataFrame:
+        """Bounded-memory read: rows stream out in ``fetch_batch``-sized
+        cursor fetches to a parquet spool, never a full-table driver list;
+        chunk predicates run one after another on the same connection."""
+        cols = ", ".join(self._q(c.source_name) for c in table.columns)
+        select = f"SELECT {cols} FROM {self._q(table.source_name)}"
+        sqls = [f"{select} WHERE {p}" for p in predicates] if predicates else [select]
+
+        def batches():
+            with self._cursor() as cur:
+                for sql in sqls:
+                    cur.execute(sql)
+                    while rows := cur.fetchmany(self.fetch_batch):
+                        yield [tuple(r) for r in rows]
+
+        return spool_batches(spark, self._read_schema(table), batches(), self._spools)
+
+    def _fetchone(self, sql: str):
+        with self._cursor() as cur:
+            cur.execute(sql)
+            return cur.fetchone()
+
+    def count(self, table: Table) -> int:
+        return self._fetchone(f"SELECT COUNT(*) FROM {self._q(table.source_name)}")[0]
+
+    def min_max(self, table: Table, key_source_name: str):
+        key = self._q(key_source_name)
+        row = self._fetchone(
+            f"SELECT MIN({key}), MAX({key}) FROM {self._q(table.source_name)}"
+        )
+        return row[0], row[1]
+
+
 @dataclass
-class SqliteSource:
+class SqliteSource(_DriverSideSource):
+    """SQLite through the stdlib driver, one read connection per call (the
+    reference's SQLite worker cap of 1, source_sqlite.go:173)."""
+
     path: str
     snake_case: bool = True
     kind: str = "sqlite"
     fetch_batch: int = 10_000  # rows held in driver memory at a time
     _spools: list = field(default_factory=list, repr=False)
 
-    def close(self) -> None:
-        """Remove the spools of every table read so far; DataFrames that
-        ``read_table`` returned cannot be scanned afterwards."""
-        remove_spools(self._spools)
+    @contextmanager
+    def _cursor(self):
+        con = sq.open_readonly(self.path)
+        try:
+            yield con.cursor()
+        finally:
+            con.close()
 
     def introspect(self) -> Schema:
         return sq.introspect_schema(self.path, self.snake_case)
@@ -145,56 +215,6 @@ class SqliteSource:
             aff = sqlite_normalize_affinity(c.column_type or c.data_type)
             fields.append(StructField(c.pg_name, _AFFINITY_SPARK[aff], True))
         return StructType(fields)
-
-    def read_table(
-        self, spark: SparkSession, table: Table, predicates: list[str] | None
-    ) -> DataFrame:
-        """Bounded-memory read through ONE connection (the reference's SQLite
-        worker cap of 1, source_sqlite.go:173): rows stream out in
-        ``fetch_batch``-sized cursor fetches to a parquet spool, never a
-        full-table driver list."""
-        schema = self._read_schema(table)
-        preds = predicates if predicates else [None]
-
-        def batches():
-            con = sq.open_readonly(self.path)
-            try:
-                cols = ", ".join(
-                    '"' + c.source_name.replace('"', '""') + '"' for c in table.columns
-                )
-                src = '"' + table.source_name.replace('"', '""') + '"'
-                for p in preds:  # sequential over chunks: 1 connection total
-                    sql = f"SELECT {cols} FROM {src}"
-                    if p:
-                        sql += f" WHERE {p}"
-                    cur = con.execute(sql)
-                    while True:
-                        rows = cur.fetchmany(self.fetch_batch)
-                        if not rows:
-                            break
-                        yield [tuple(r) for r in rows]
-            finally:
-                con.close()
-
-        return spool_batches(spark, schema, batches(), self._spools)
-
-    def count(self, table: Table) -> int:
-        con = sq.open_readonly(self.path)
-        try:
-            return con.execute(f'SELECT COUNT(*) FROM "{table.source_name}"').fetchone()[0]
-        finally:
-            con.close()
-
-    def min_max(self, table: Table, key_source_name: str):
-        con = sq.open_readonly(self.path)
-        try:
-            row = con.execute(
-                f'SELECT MIN("{key_source_name}"), MAX("{key_source_name}") '
-                f'FROM "{table.source_name}"'
-            ).fetchone()
-            return row[0], row[1]
-        finally:
-            con.close()
 
 
 @dataclass
@@ -432,7 +452,7 @@ class SpoolTarget:
 
 
 @dataclass
-class SingleTxSource:
+class SingleTxSource(_DriverSideSource):
     """O3 — consistent-snapshot source: every table reads sequentially
     through ONE DB-API connection inside ONE read-only transaction
     (reference migrate.go:149-259, `single_tx` mode).
@@ -468,6 +488,14 @@ class SingleTxSource:
                 cur.execute(stmt)
         return self._con
 
+    @contextmanager
+    def _cursor(self):
+        cur = self._connection().cursor()
+        try:
+            yield cur
+        finally:
+            cur.close()
+
     def close(self) -> None:
         """End the snapshot transaction and remove the spools of every table
         read so far."""
@@ -479,7 +507,7 @@ class SingleTxSource:
                     self._con.close()
                     self._con = None
         finally:
-            remove_spools(self._spools)
+            super().close()
 
     def introspect(self) -> Schema:
         return self.schema
@@ -487,39 +515,5 @@ class SingleTxSource:
     def source_objects(self) -> SourceObjects:
         return self.objects
 
-    def read_table(
-        self, spark: SparkSession, table: Table, predicates: list[str] | None
-    ) -> DataFrame:
-        schema = self.read_schemas[table.pg_name]
-        preds = predicates if predicates else [None]
-        con = self._connection()
-
-        def batches():
-            cols = ", ".join(c.source_name for c in table.columns)
-            for p in preds:  # sequential chunks, one shared connection
-                sql = f"SELECT {cols} FROM {table.source_name}"
-                if p:
-                    sql += f" WHERE {p}"
-                cur = con.cursor()
-                cur.execute(sql)
-                while True:
-                    rows = cur.fetchmany(self.fetch_batch)
-                    if not rows:
-                        break
-                    yield [tuple(r) for r in rows]
-
-        return spool_batches(spark, schema, batches(), self._spools)
-
-    def count(self, table: Table) -> int:
-        cur = self._connection().cursor()
-        cur.execute(f"SELECT COUNT(*) FROM {table.source_name}")
-        return cur.fetchone()[0]
-
-    def min_max(self, table: Table, key_source_name: str):
-        cur = self._connection().cursor()
-        cur.execute(
-            f"SELECT MIN({key_source_name}), MAX({key_source_name}) "
-            f"FROM {table.source_name}"
-        )
-        row = cur.fetchone()
-        return row[0], row[1]
+    def _read_schema(self, table: Table) -> StructType:
+        return self.read_schemas[table.pg_name]

@@ -50,6 +50,8 @@ class MigrationConfig:
     checkpoint_path: str = ""  # default: <config dir>/.pgferry_spark_checkpoint.json
     # parallelism & chunking
     workers: int = 0  # 0 -> min(cpu, 8); SQLite capped at 1
+    # accepted for TOML parity with the reference; constraint replay runs
+    # its statements one after another, so no index builds run in a pool
     index_workers: int = 0  # 0 -> inherit workers
     chunk_size: int = 100_000
     # physical-plan advisor (plans/advisor.py): size the shuffle confs and

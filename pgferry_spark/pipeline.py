@@ -15,9 +15,10 @@ main.go:125-348, post.go:17-100) re-expressed over Spark:
  7. checkpoint/resume around the movement phase
 
 The **target backend** is pluggable: `execute(sql)` + `write(df, table)` +
-`count(table)`. Production is JDBC/COPY against PostgreSQL; tests use a
-local spool target. The reference's `workers` semaphore becomes Spark's
-task scheduler over the chunk partitions.
+`count(table)` + `delete_where(table, predicate)`. Production is COPY
+against PostgreSQL; tests use a local spool target. The reference's
+`workers` semaphore becomes Spark's task scheduler over the chunk
+partitions.
 
 `single_tx` snapshot mode (reference migrate.go:149-259) is the one
 semantic it is impossible to distribute: one REPEATABLE READ transaction
@@ -54,6 +55,7 @@ class TargetBackend(Protocol):
     def execute(self, sql: str) -> None: ...
     def write(self, df: DataFrame, table: str, append: bool = False) -> int: ...
     def count(self, table: str) -> int: ...
+    def delete_where(self, table: str, predicate: str) -> None: ...
 
 
 class SourceBackend(Protocol):
@@ -370,7 +372,8 @@ class MigrationPipeline:
         """Move one table with **chunk-granular restartability**: chunk
         predicates are processed in batches of ``workers×4``; each batch is
         one distributed read→transform→write job, and every chunk in the
-        batch is marked complete only after the batch's write commits.
+        batch is marked complete only after the batch's write commits. An
+        unchunked table is one batch of one unit, read without predicates.
 
         Each batch's read → transform → anti-join runs once, inside its
         write. ``orphans_removed`` is ``rows_in − rows_written`` over the
@@ -392,22 +395,11 @@ class MigrationPipeline:
             return TableRunResult(table.pg_name, 0, 0, complete_this_run=False)
         plan = self.chunk_plan_for(table)
         preds = plan.predicates()
-        keep = table.pg_name in self._referenced
-
-        if preds is None or len(preds) <= 1:
-            rows_in, rows, cleaned = self._write_batch(
-                table, preds, parents, None, keep, append=False
-            )
-            self.checkpoint.begin_table(table.pg_name, max(1, len(plan.chunks)))
-            self.checkpoint.mark_table_done(table.pg_name, rows)
-            if keep:
-                with self._cache_lock:
-                    self._cleaned_cache[table.pg_name] = cleaned
-            return TableRunResult(table.pg_name, rows, len(plan.chunks), rows_in - rows)
-
+        # an unchunked table is one unit read without a predicate
+        units = preds if preds is not None else [None]
         done = self.checkpoint.completed_indices(table.pg_name)
-        self.checkpoint.begin_table(table.pg_name, len(preds))
-        todo = [(i, p) for i, p in enumerate(preds) if i not in done]
+        self.checkpoint.begin_table(table.pg_name, len(units))
+        todo = [(i, p) for i, p in enumerate(units) if i not in done]
         if done and todo:
             # partitions of an unrecorded chunk may have committed before the
             # crash — purge the pending chunks' key ranges so re-writes land
@@ -415,20 +407,23 @@ class MigrationPipeline:
             # transaction; the range DELETE is the idempotent equivalent)
             self._purge_chunks(table, plan, [i for i, _ in todo])
         # a resumed table writes only part of itself: nothing to keep
-        keep = keep and not done
-        # self-FK cleanup must see the whole pre-clean table, not the batch
-        has_self_fk = any(fk.ref_pg_table == table.pg_name for fk in table.foreign_keys)
-        self_snap = self._persist(self._transformed(table, None)) if has_self_fk else None
+        keep = table.pg_name in self._referenced and not done
         batch_size = max(1, self.cfg.effective_workers() * 4)
+        batches = [todo[s : s + batch_size] for s in range(0, len(todo), batch_size)]
+        # self-FK cleanup must see the whole pre-clean table; a batch that
+        # is the whole table serves as its own snapshot
+        has_self_fk = any(fk.ref_pg_table == table.pg_name for fk in table.foreign_keys)
+        self_snap = None
+        if has_self_fk and (len(batches) > 1 or done):
+            self_snap = self._persist(self._transformed(table, None))
         rows_total = rows_in_total = 0
         kept: list[DataFrame] = []
-        appending = bool(done)  # resumed: prior chunks already landed
-        for start in range(0, len(todo), batch_size):
-            batch = todo[start : start + batch_size]
+        for n, batch in enumerate(batches):
             rows_in, rows, cleaned = self._write_batch(
-                table, [p for _, p in batch], parents, self_snap, keep, appending
+                table, None if preds is None else [p for _, p in batch],
+                parents, self_snap, keep,
+                append=bool(done) or n > 0,  # resumed: prior chunks already landed
             )
-            appending = True
             rows_total += rows
             rows_in_total += rows_in
             if keep:
@@ -437,8 +432,8 @@ class MigrationPipeline:
             # the write is repaired by the delete-then-insert pass above on
             # the next resume. Rows land on the first chunk of the batch so
             # checkpoint row totals stay exact.
-            for n, (i, _) in enumerate(batch):
-                self.checkpoint.mark_chunk_done(table.pg_name, i, rows if n == 0 else 0)
+            for k, (i, _) in enumerate(batch):
+                self.checkpoint.mark_chunk_done(table.pg_name, i, rows if k == 0 else 0)
         if self_snap is not None:
             self_snap.unpersist()
         if kept:
@@ -446,7 +441,7 @@ class MigrationPipeline:
                 self._cleaned_cache[table.pg_name] = reduce(DataFrame.unionByName, kept)
         self.checkpoint.mark_table_done(table.pg_name, rows_total)
         return TableRunResult(
-            table.pg_name, rows_total, len(preds), rows_in_total - rows_total,
+            table.pg_name, rows_total, len(units), rows_in_total - rows_total,
             complete_this_run=not done,
         )
 
@@ -526,8 +521,7 @@ class MigrationPipeline:
         delete: consecutive chunks are contiguous ranges, so each run of
         them merges into one range and the runs are ORed. ``delete_where``
         receives the predicate over the BARE normalized column name (valid
-        in both Spark SQL and fold-to-lowercase PostgreSQL); the raw-SQL
-        fallback quotes identifiers pg-style."""
+        in both Spark SQL and fold-to-lowercase PostgreSQL)."""
         runs: list[list[int]] = []
         for i in sorted(indices):
             if runs and runs[-1][-1] == i - 1:
@@ -539,15 +533,9 @@ class MigrationPipeline:
             for r in runs
         ]
         pg_key = table.column(plan.chunk_key).pg_name
-
-        def where(key: str) -> str:
-            return " OR ".join(f"({c.predicate(key)})" for c in ranges)
-
-        if hasattr(self.target, "delete_where"):
-            self.target.delete_where(table.pg_name, where(pg_key))
-        else:
-            qualified = f"{_q(self.cfg.target_schema)}.{_q(table.pg_name)}"
-            self.target.execute(f"DELETE FROM {qualified} WHERE {where(_q(pg_key))}")
+        self.target.delete_where(
+            table.pg_name, " OR ".join(f"({c.predicate(pg_key)})" for c in ranges)
+        )
 
     # -- the full sequence ---------------------------------------------------
 
@@ -673,10 +661,7 @@ class MigrationPipeline:
                     return self.cleaned_source_df(t, parent_dfs).count()
 
                 result.validation = validate_row_counts(
-                    [t.pg_name for t in tables],
-                    expected_count,
-                    self.target.count,
-                    max_workers=1,  # expected_count launches Spark jobs; keep serial
+                    [t.pg_name for t in tables], expected_count, self.target.count,
                 )
 
             run_hooks(self.cfg.hooks, "before_fk", self.cfg.target_schema, self.target.execute)

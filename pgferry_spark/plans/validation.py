@@ -9,7 +9,6 @@ cost at 100 TB is bounded by the *target*-side count, not a data scan.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable, Sequence
 
@@ -29,16 +28,11 @@ def validate_row_counts(
     tables: list[str],
     source_count: Callable[[str], int],
     target_count: Callable[[str], int],
-    max_workers: int = 8,
 ) -> list[ValidationResult]:
-    """Parallel per-table count comparison; results in input-table order."""
-
-    def one(t: str) -> ValidationResult:
-        return ValidationResult(t, source_count(t), target_count(t))
-
-    with ThreadPoolExecutor(max_workers=max(1, max_workers)) as pool:
-        results = list(pool.map(one, tables))
-    return results
+    """Per-table count comparison, one table at a time, in input-table
+    order. Serial on purpose: a source count may launch Spark jobs or use
+    a source's single connection."""
+    return [ValidationResult(t, source_count(t), target_count(t)) for t in tables]
 
 
 def row_fingerprint(cols: list[str]):

@@ -210,27 +210,6 @@ def parse_catalog_rows(
     return Schema(tables=out)
 
 
-def build_source_object_queries(schema: str = "dbo") -> dict[str, str]:
-    esc = schema.replace("'", "''")
-    return {
-        "views": (
-            "SELECT v.name FROM sys.views v JOIN sys.schemas s "
-            f"ON s.schema_id = v.schema_id WHERE s.name = '{esc}' ORDER BY v.name"
-        ),
-        "routines": (
-            "SELECT o.name FROM sys.objects o JOIN sys.schemas s "
-            "ON s.schema_id = o.schema_id "
-            f"WHERE s.name = '{esc}' AND o.type IN ('P','FN','IF','TF') ORDER BY o.name"
-        ),
-        "triggers": (
-            "SELECT tr.name FROM sys.triggers tr "
-            "JOIN sys.tables t ON t.object_id = tr.parent_id "
-            "JOIN sys.schemas s ON s.schema_id = t.schema_id "
-            f"WHERE s.name = '{esc}' ORDER BY tr.name"
-        ),
-    }
-
-
 def parse_source_objects(views, routines, triggers) -> SourceObjects:
     pick = lambda rows: [r[next(iter(r))] if isinstance(r, dict) else r for r in rows]
     return SourceObjects(views=pick(views), routines=pick(routines), triggers=pick(triggers))

@@ -145,24 +145,6 @@ def parse_catalog_rows(
     return Schema(tables=out)
 
 
-def build_source_object_queries(db: str) -> dict[str, str]:
-    esc = db.replace("'", "''")
-    return {
-        "views": (
-            "SELECT TABLE_NAME FROM INFORMATION_SCHEMA.VIEWS "
-            f"WHERE TABLE_SCHEMA = '{esc}' ORDER BY TABLE_NAME"
-        ),
-        "routines": (
-            "SELECT ROUTINE_NAME FROM INFORMATION_SCHEMA.ROUTINES "
-            f"WHERE ROUTINE_SCHEMA = '{esc}' ORDER BY ROUTINE_NAME"
-        ),
-        "triggers": (
-            "SELECT TRIGGER_NAME FROM INFORMATION_SCHEMA.TRIGGERS "
-            f"WHERE TRIGGER_SCHEMA = '{esc}' ORDER BY TRIGGER_NAME"
-        ),
-    }
-
-
 def parse_source_objects(views, routines, triggers) -> SourceObjects:
     return SourceObjects(
         views=[r[next(iter(r))] if isinstance(r, dict) else r for r in views],

@@ -7,34 +7,21 @@ protocol from each executor via ``foreachPartition``.
 
 Each partition COPYs inside ONE transaction, so a partition (= chunk) either
 lands fully or not at all — the property the checkpoint/resume layer needs
-(SURVEY §7 hard-part 5). Three writers, same shape:
-
-* ``copy_partition_writer`` — psycopg wire path (gated: not installed here);
-* ``psql_partition_writer`` / ``PsqlTarget`` — COPY FROM STDIN through the
-  ``psql`` client subprocess: a REAL PostgreSQL COPY execution (one psql
-  invocation = one transaction per partition), used by the integration
-  tests against a throwaway local server;
-* ``spool_partition_writer`` — serverless CSV spool stand-in.
+(SURVEY §7 hard-part 5). There is one writer: ``psql_partition_writer``
+runs COPY FROM STDIN through the ``psql`` client subprocess (one psql
+invocation = one transaction per partition), and ``PsqlTarget`` is the
+target backend built on it, run end to end by the integration tests and
+the benchmark against a real PostgreSQL server.
 """
 
 from __future__ import annotations
 
-import csv
-import io
-import os
+import itertools
 import subprocess
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql import DataFrame
-
-try:  # pragma: no cover - psycopg not installed in the test container
-    import psycopg  # type: ignore
-
-    HAVE_PSYCOPG = True
-except Exception:  # pragma: no cover
-    psycopg = None
-    HAVE_PSYCOPG = False
 
 
 def pg_cell_text(v) -> str | None:
@@ -65,75 +52,9 @@ def _copy_escape(s: str) -> str:
     )
 
 
-def _rows_to_copy_text(rows: Iterator, ncols: int) -> io.StringIO:
-    """Serialize rows to COPY TEXT format (tab-separated, \\N for NULL)."""
-    buf = io.StringIO()
-    for row in rows:
-        out = []
-        for v in row:
-            cell = pg_cell_text(v)
-            out.append("\\N" if cell is None else _copy_escape(cell))
-        buf.write("\t".join(out) + "\n")
-    buf.seek(0)
-    return buf
-
-
-def copy_partition_writer(dsn: str, table: str, columns: list[str]):
-    """Return a ``foreachPartition`` function that COPYs the partition into
-    PostgreSQL inside one transaction."""
-
-    def write(rows: Iterator) -> None:
-        if not HAVE_PSYCOPG:
-            raise RuntimeError(
-                "psycopg not available — use the JDBC writer (sources.jdbc.write_table) "
-                "or the spool sink (spool_partition_writer) in this environment"
-            )
-        with psycopg.connect(dsn) as conn:  # pragma: no cover
-            with conn.cursor() as cur:
-                cols = ", ".join(f'"{c}"' for c in columns)
-                with cur.copy(f'COPY {table} ({cols}) FROM STDIN') as cp:
-                    for row in rows:
-                        cp.write_row(row)
-            conn.commit()
-
-    return write
-
-
-def spool_partition_writer(spool_dir: str):
-    """Test-environment stand-in: write each partition to one CSV spool file
-    (same per-partition transactional shape, observable on local disk)."""
-
-    def write_partition_index(idx: int, rows: Iterator) -> Iterator:
-        os.makedirs(spool_dir, exist_ok=True)
-        tmp = os.path.join(spool_dir, f"part-{idx:05d}.csv.tmp")
-        final = os.path.join(spool_dir, f"part-{idx:05d}.csv")
-        with open(tmp, "w", newline="") as f:
-            w = csv.writer(f)
-            for row in rows:
-                w.writerow(list(row))
-        os.replace(tmp, final)  # atomic per-partition commit
-        return iter([])
-
-    return write_partition_index
-
-
-def copy_to_postgres(df: DataFrame, dsn: str, table: str) -> None:
-    """Distributed COPY: one transaction per partition."""
-    columns = df.columns
-    df.foreachPartition(copy_partition_writer(dsn, table, columns))
-
-
-def spool_to_dir(df: DataFrame, spool_dir: str) -> int:
-    """Spool each partition atomically to ``spool_dir``; returns #partitions."""
-    writer = spool_partition_writer(spool_dir)
-    df.rdd.mapPartitionsWithIndex(writer).count()
-    return df.rdd.getNumPartitions()
-
-
 def psql_partition_writer(psql_args: list[str], copy_sql: str):
     """``foreachPartition`` function COPYing the partition through the psql
-    client: one subprocess = one transaction per partition — the same
-    commit granularity as the psycopg wire path."""
+    client: one subprocess = one transaction per partition."""
 
     def write(rows: Iterator) -> None:
         rows = iter(rows)
@@ -141,8 +62,6 @@ def psql_partition_writer(psql_args: list[str], copy_sql: str):
             first = next(rows)
         except StopIteration:
             return  # empty partition: no transaction at all
-        import itertools
-
         proc = subprocess.Popen(
             psql_args + ["-c", copy_sql],
             stdin=subprocess.PIPE,
@@ -172,8 +91,8 @@ class PsqlTarget:
     """Target backend executing against a REAL PostgreSQL server through the
     psql client (no Python driver needed): DDL via ``psql -c``, data via
     per-partition ``COPY FROM STDIN`` subprocesses. Commit granularity and
-    DDL transcript order are identical to the psycopg/pgx production path —
-    this is the backend the integration tests run end to end."""
+    DDL transcript order match the reference's pgx COPY path — this is the
+    backend the integration tests and the benchmark run end to end."""
 
     host: str  # unix socket dir or hostname
     port: int
@@ -220,9 +139,11 @@ class PsqlTarget:
 
     def write(self, df: DataFrame, table: str, append: bool = False) -> int:
         qualified = self._qualified(table)
-        if not append:
+        if append:
+            before = self.count(table)
+        else:
             self.execute(f"TRUNCATE {qualified}")
-        before = self.count(table)
+            before = 0
         cols = ", ".join(f'"{c}"' for c in df.columns)
         copy_sql = f"COPY {qualified} ({cols}) FROM STDIN"
         df.foreachPartition(psql_partition_writer(self._psql(), copy_sql))

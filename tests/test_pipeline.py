@@ -440,6 +440,48 @@ def test_self_fk_chunked_batches_keep_cross_batch_parents(spark, tmp_path):
     assert ids == [i for i in range(1, 101) if i != 50]
 
 
+def test_self_fk_table_in_one_batch_reads_once(spark, tmp_path):
+    """A chunked self-FK table whose chunks all fit in one batch is the
+    whole table in that batch: it is its own self-FK snapshot, so the
+    source is read once (not once more for a separate snapshot), and the
+    rows and orphans still come out exact."""
+    import sqlite3 as sq3
+
+    db = str(tmp_path / "onebatch.db")
+    con = sq3.connect(db)
+    con.execute(
+        "CREATE TABLE node (id INTEGER PRIMARY KEY, parent_id INTEGER REFERENCES node(id))"
+    )
+    rows = [(i, None if i == 1 else (999 if i == 15 else i - 1)) for i in range(1, 31)]
+    con.executemany("INSERT INTO node VALUES (?,?)", rows)
+    con.commit()
+    con.close()
+
+    reads = []
+
+    class CountingSource(SqliteSource):
+        def read_table(self, spark, table, predicates):
+            reads.append(predicates)
+            return super().read_table(spark, table, predicates)
+
+    # chunk_size=10 plans 3 chunks; workers=1 batches 4 chunks at a time
+    cfg = MigrationConfig(
+        source_type="sqlite", source_dsn=db, target_dsn="spool://x",
+        target_schema="app", chunk_size=10, workers=1,
+    )
+    out = str(tmp_path / "onebatch_out")
+    result = MigrationPipeline(
+        spark, cfg, CountingSource(db), SpoolTarget(spark, out),
+        map_sqlite_type, map_sqlite_default,
+    ).run()
+    assert result.ok
+    assert len(reads) == 1 and len(reads[0]) == 3
+    res = result.tables[0]
+    assert (res.rows_written, res.orphans_removed, res.chunks) == (29, 1, 3)
+    ids = sorted(r["id"] for r in spark.read.parquet(f"{out}/node").collect())
+    assert ids == [i for i in range(1, 31) if i != 15]
+
+
 def test_resume_after_partition_commit_without_chunk_record(spark, tmp_path):
     """Production sinks commit per partition: a crash inside a batch write
     can leave its rows committed with NO chunk recorded. Resume must

@@ -45,9 +45,7 @@ def test_single_tx_one_connection_sequential(spark, two_table_db, tmp_path):
     opened = []
 
     def connect():
-        # check_same_thread off: the validation runner touches the source
-        # from its worker thread (real DB-API drivers permit this)
-        con = sqlite3.connect(two_table_db, check_same_thread=False)
+        con = sqlite3.connect(two_table_db)
         opened.append(con)
         return con
 
@@ -168,3 +166,49 @@ def test_single_tx_close_removes_spools(spark, two_table_db, tmp_path, monkeypat
     assert len(_spools(tmp)) == 1
     src.close()
     assert _spools(tmp) == []
+
+
+def test_driver_side_sources_quote_identifiers(spark, tmp_path):
+    """Both driver-side sources quote every identifier for their dialect:
+    a table named with a reserved word, a reserved-word column and a
+    column whose name holds a double quote read, count and probe
+    correctly (``kind="mysql"`` sends backticks, which SQLite accepts)."""
+    path = str(tmp_path / "quoted.db")
+    con = sqlite3.connect(path)
+    con.execute('CREATE TABLE "order" (id INTEGER PRIMARY KEY, "group" TEXT, "we""ird" INTEGER)')
+    con.executemany('INSERT INTO "order" VALUES (?,?,?)', [(i, f"g{i}", 10 * i) for i in range(1, 6)])
+    con.commit()
+    con.close()
+    rows = sorted((i, f"g{i}", 10 * i) for i in range(1, 6))
+
+    table = Table(
+        source_name="order", pg_name="order",
+        columns=[
+            Column(source_name=n, pg_name=p, data_type=t, column_type=t,
+                   nullable=True, ordinal_pos=i + 1)
+            for i, (n, p, t) in enumerate(
+                [("id", "id", "bigint"), ("group", "group", "text"), ('we"ird', "weird", "bigint")]
+            )
+        ],
+    )
+    stx = SingleTxSource(
+        connect=lambda: sqlite3.connect(path),
+        schema=Schema(tables=[table]),
+        read_schemas={"order": StructType([
+            StructField("id", LongType()), StructField("group", StringType()),
+            StructField("weird", LongType()),
+        ])},
+        kind="mysql",
+    )
+    sqlite = SqliteSource(path)
+    sqlite_table = sqlite.introspect().tables[0]
+    try:
+        for src, tbl in ((stx, table), (sqlite, sqlite_table)):
+            assert sorted(tuple(r) for r in src.read_table(spark, tbl, None).collect()) == rows
+            assert src.read_table(spark, tbl, ["`id` <= 2" if src is stx else '"id" <= 2']).count() == 2
+            assert src.count(tbl) == 5
+            assert src.min_max(tbl, 'we"ird') == (10, 50)
+            assert src.min_max(tbl, "group") == ("g1", "g5")
+    finally:
+        stx.close()
+        sqlite.close()

@@ -4,7 +4,7 @@ from pgferry_spark.catalog.model import Column, Table
 from pgferry_spark.plans.chunk import plan_table_chunks
 from pgferry_spark.sources.jdbc import build_source_select, mysql_source, select_expression
 from pgferry_spark.sources.parquet import chunked_parquet_read, read_parquet
-from pgferry_spark.sources.sink import spool_to_dir
+from pgferry_spark.sources.sink import PsqlTarget
 from pgferry_spark.types import TypeMappingConfig
 
 SF = "/root/testdata/sf0.001"
@@ -64,12 +64,26 @@ def test_mysql_source_session_normalization():
     assert opts["url"] == "jdbc:mysql://h/db"
 
 
-def test_spool_sink_atomic_partition_files(spark, tmp_path):
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "id: long, v: string").repartition(4)
-    spool = str(tmp_path / "spool")
-    n = spool_to_dir(df, spool)
-    files = sorted(os.listdir(spool))
-    assert len(files) == n == 4
-    assert all(f.endswith(".csv") for f in files)  # no .tmp leftovers
-    total = sum(len(open(os.path.join(spool, f)).read().strip().splitlines()) for f in files)
-    assert total == 20
+def test_psql_target_counts_only_when_appending(spark):
+    """A fresh write truncates and starts from zero: the only row count it
+    runs is the one after the COPY. An append counts before and after."""
+
+    class Recording(PsqlTarget):
+        def __init__(self):
+            super().__init__(host="", port=5432, db="d", user="u", schema="s")
+            self.calls = []
+
+        def execute(self, sql):
+            self.calls.append(sql.split()[0])
+
+        def count(self, table):
+            self.calls.append("count")
+            return 0
+
+    empty = spark.createDataFrame([], "id: long")  # no partition runs psql
+    target = Recording()
+    assert target.write(empty, "t") == 0
+    assert target.calls == ["TRUNCATE", "count"]
+    target.calls.clear()
+    assert target.write(empty, "t", append=True) == 0
+    assert target.calls == ["count", "count"]
